@@ -248,35 +248,8 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
-  /** local[N] width: env override, else the machine's core count — a
-    * hardcoded 32 oversubscribes smaller hosts and skews timings
-    * (shuffle.partitions tracks it too). Shared by Verify/TimeQ.
-    */
-  private[graft] def defaultCpus: String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-
-  /** Codegen-cache capacity (spark.sql.codegen.cache.maxEntries, a
-    * STATIC conf — session-builder only). Spark's default is 100
-    * compiled-class entries, sized for a handful of concurrent queries;
-    * this suite's heavy lifecycle queries alone generate >200 codegen
-    * units per run (r12 DriverProf: q_incremental_refresh recompiled
-    * 204 units EVERY timed run — the warm-up pass's compiles were all
-    * evicted, defeating the bench's own "warm-JIT + codegen cache"
-    * contract), and janino recompiles are pure driver fixed cost
-    * (~10-30 ms each). 8192 entries hold the whole 224-query suite's
-    * units; NOT scale- or core-count-dependent — any production driver
-    * running a many-query workload sizes this cache to the workload
-    * (measured r12: q_incremental_refresh 9.52→7.88 s,
-    * q_forget_cascade 4.96→3.79 s min-of-5, recompiles 204→4).
-    * Env-overridable for A/B (SPARK_GRAFT_CODEGEN_CACHE).
-    */
-  private[graft] def codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = defaultCpus
     // Bench-only: route sink round-trip scratch to tmpfs when one exists
     // (and neither override is already set), so sink-query timings
     // measure the operators rather than this box's disk — the r5
@@ -291,40 +264,9 @@ object Bench {
           "[bench] scratch -> /dev/shm/graft-bench-scratch (tmpfs)")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-              graft.Bench.codegenCacheEntries)
-      // Commit-algorithm v2: task output lands in place at task commit
-      // instead of v1's job-commit-time serial driver-side rename pass.
-      // At this fixture's file counts the measured full-suite effect is
-      // noise-level (177.3 vs 179.6 s A/B) — kept because it is the
-      // deployment-correct choice for a rename-cost store (the cloud
-      // committers exist for exactly this) and the bench should measure
-      // operators, not commit renames. Correctness artifacts (Verify,
-      // specs) keep the default committer.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-              "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      // clearCache only covers Dataset persist entries; localCheckpoint
-      // blocks (BPE merge rounds, store-maintenance barriers) live as
-      // persisted RDDs until the ContextCleaner's GC-driven sweep —
-      // unpersist them directly so no run measures against the prior
-      // run's leftover blocks (the cold-cache contract). The old RDD
-      // handles are dead between runs; dropping their blocks is safe.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    val spark = Session.local(Session.defaultCpus, timed = true)
     def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      dropCaches()
+      Session.dropCaches(spark)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable =>
@@ -332,7 +274,7 @@ object Bench {
           false
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      dropCaches()
+      Session.dropCaches(spark)
       // a failed query must not masquerade as a fast one: -1 marker
       if (ok) sec else -1.0
     }
@@ -343,7 +285,7 @@ object Bench {
     // hygiene invariant the timed passes already hold)
     named.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-      dropCaches()
+      Session.dropCaches(spark)
     }
     // Two timed passes over the WHOLE suite, then per-query min — NOT
     // two back-to-back runs per query: host contention on this box

@@ -8,11 +8,10 @@ import graft.functions._
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions in the SQL function registry, so SQL-surface users get the
-  * same codegen'd fast path as the Column API:
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  * same codegen'd fast path as the Column API. A session gets them from
+  * its builder's `.withExtensions(new GraftExtensions)` or
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`, or on a
+  * live session from `registerAll` (what `Session.local` calls):
   *
   *   spark.sql("SELECT simhash64(split(text,' ')), rolling_hash(text),
   *              cosine_sim(a, b), dot_product(a, b),

@@ -1828,7 +1828,7 @@ object SparkEntry {
     // The Production hash mode (xxhash64 coins/fingerprints instead of
     // md5 — Hashing scaladoc) is NOT a standing bench query: running
     // the whole export flagship twice per bench pass bought one number.
-    // The md5-tax is recorded as a TimeQ data point instead (README
+    // The md5-tax is recorded as a timing data point instead (README
     // status: 6.63 s md5 vs 6.27 s xxhash64 warm at sf0.1, ~6% — the
     // fixture is machinery-dominated) and HashingSpec pins the two
     // modes' contracts.

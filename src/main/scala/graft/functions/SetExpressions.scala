@@ -23,10 +23,6 @@ import org.apache.spark.sql.types._
   * (64× less byte hashing than the higher-order-function formulation).
   */
 object SetExpressions {
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    Bridge.toColumn(SortedIntersectCount(
-      Bridge.toExpression(a), Bridge.toExpression(b)))
-
   def minhashSig(shingles: Column, k: Int): Column =
     Bridge.toColumn(MinHashSig(Bridge.toExpression(shingles), k))
 

@@ -25,12 +25,14 @@ object CoreOps {
     * it is scale-adaptive and never shuffles a large corpus:
     *
     *  1. NARROW-PLAN gate: only scan-rooted frames (project/filter/
-    *     repartition over a file scan or local relation) are eligible.
-    *     Anything with a join/aggregate/window declines — both because
-    *     the helper's purpose is floor-the-SCAN, and because probing
-    *     `.rdd` under AQE on a plan with exchanges would eagerly execute
-    *     those upstream stages in a separate QueryExecution just to read
-    *     a partition count (r11 advisor catch; latent then, closed now).
+    *     coalesce over a file scan or local relation) are eligible.
+    *     Anything with a join/aggregate/window/shuffling repartition
+    *     declines — both because the helper's purpose is floor-the-SCAN,
+    *     and because probing `.rdd` under AQE on a plan with exchanges
+    *     would eagerly execute those upstream stages in a separate
+    *     QueryExecution just to read a partition count. Only the
+    *     non-shuffling `Repartition` (coalesce) is whitelisted:
+    *     `repartition(n)` and `RepartitionByExpression` plan an exchange.
     *  2. BYTE ceiling: the scan leaves' estimated bytes must fit
     *     p·maxPartitionBytes — partition count alone is a size proxy
     *     that a few-split-but-wide frame defeats (31 multi-GB gzip
@@ -53,8 +55,8 @@ object CoreOps {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val plan = df.queryExecution.analyzed
     val complex = plan.exists {
-      case _: Project | _: Filter | _: SubqueryAlias | _: Repartition |
-           _: RepartitionByExpression | _: LocalRelation |
+      case r: Repartition => r.shuffle
+      case _: Project | _: Filter | _: SubqueryAlias | _: LocalRelation |
            _: LogicalRelation => false
       case _ => true
     }

@@ -114,11 +114,6 @@ object EmbeddingPca {
                  .as("proj"))
   }
 
-  /** fit + project in one call — the pipeline-facing shape. */
-  def pcaProject(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-                 whiten: Boolean = false): DataFrame =
-    project(emb, idCol, vecCol, fit(emb, vecCol, k, whiten))
-
   /** The scree report: per kept component its eigenvalue (= projected
     * variance) and the cumulative fraction of TOTAL variance explained —
     * the "how many dims do I actually need" signal, as a (tiny, k-row)

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Dump formatted physical plans for the named queries (dev tool for the
   * plan audit: pushdown, pruning, broadcast, codegen spans).
@@ -13,11 +11,8 @@ object Explain {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed 4 cores, not the host's, so plan dumps compare across machines
+    val spark = Session.local(4, timed = false)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n================ $name ================")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Bench, GraftExtensions, SparkEntry, Tables}
+import graft.{Bench, Session, SparkEntry, Tables}
 import graft.dedup.DedupOps
 import graft.similarity.SimilarityOps
 
@@ -1606,20 +1606,6 @@ object Fuzz {
     (nOk, nErr)
   }
 
-  private[tools] def buildSession(): SparkSession = {
-    val cpus = Bench.defaultCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.registerAll(spark)
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -1627,7 +1613,7 @@ object Fuzz {
     val seed = if (args.length > 3) args(3).toLong else 9L
     val fams = resolveFamilies(args.lift(4).getOrElse("all"))
     require(fams.nonEmpty, s"no matching families in ${args.lift(4)}")
-    val spark = buildSession()
+    val spark = Session.local(Session.defaultCpus, timed = false)
     val (_, nErr) = runSweep(spark, sfDir, outDir, n, seed, fams)
     spark.stop()
     if (nErr > 0) sys.exit(2)

@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import graft.Session
+
 /** Replay the banked differential-fuzz certificate (r10 verdict task 5:
   * the config totals lived only as PLANS.md prose; this makes them
   * re-provable in one command without archaeology).
@@ -37,7 +39,7 @@ object Replay {
     }
     require(entries.nonEmpty, s"no manifest entries match $idFilter")
 
-    val spark = Fuzz.buildSession()
+    val spark = Session.local(Session.defaultCpus, timed = false)
     var totOk, totErr = 0
     val t0 = System.nanoTime()
     entries.foreach { e =>

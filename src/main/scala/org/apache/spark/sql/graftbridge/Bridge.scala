@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge to the `private[sql]` Expression⇄Column converters in
-  * Spark 4's classic API (columnNodeSupport.scala). Lives under
-  * `org.apache.spark.sql` solely to satisfy the access modifier; all graft
-  * code goes through these two calls.
+  * Spark 4's classic API (columnNodeSupport.scala), plus the few other
+  * package-private hooks graft needs. Lives under `org.apache.spark.sql`
+  * solely to satisfy the access modifiers.
   */
 object Bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +22,12 @@ object Bridge {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     ext.registerFunctions(classic.sessionState.functionRegistry)
   }
+
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`): listener delivery is
+    * asynchronous, so a reader of listener-collected state calls this
+    * first instead of sleeping and hoping.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ops.CoreOps
 import graft.quality.Quality
@@ -23,14 +25,39 @@ class CoreOpsSpec extends SparkSpec {
     assert(spread.except(df).isEmpty && df.except(spread).isEmpty)
   }
 
+  /** Runs `body` and counts the Spark jobs it started: its jobs carry a
+    * job group, and the listener bus is drained before the count is read.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = "jobs-during"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      Bridge.drainListenerBus(sc)
+      (r, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
   test("spreadSmallScan is a no-op (no added exchange) at/above parallelism") {
     val p = spark.sparkContext.defaultParallelism
     val df = Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("id", "v")
       .repartition(p + 2, col("id"))
-    val spread = CoreOps.spreadSmallScan(df, col("id"))
+    val (spread, jobs) = jobsDuring(CoreOps.spreadSmallScan(df, col("id")))
     // the SAME plan object comes back: the gate adds nothing at scale
     assert(spread eq df,
       "an already-parallel frame must pass through unchanged")
+    // deciding must not execute the frame's shuffle (the .rdd probe on
+    // an AQE plan with an exchange runs the upstream stage)
+    assert(jobs === 0, "spreadSmallScan ran Spark jobs while deciding")
   }
 
   test("dropNulls drops rows with any null (P1)") {
